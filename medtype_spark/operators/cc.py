@@ -136,7 +136,11 @@ def connected_components(
     stats : optional dict, filled in place with execution evidence:
         ``path`` ("empty" | "small" | "distributed"), ``n_edges``
         (small path: exact count from the complete probe), ``rounds``
-        (distributed path: alternating-star rounds executed).
+        and ``converged`` (distributed path: alternating-star rounds
+        executed, and whether two consecutive fingerprints matched).
+
+    Raises RuntimeError when the distributed path reaches ``max_iter``
+    rounds without a fixpoint, instead of returning unconverged labels.
 
     Returns DataFrame(node, component).
     """
@@ -222,22 +226,28 @@ def connected_components(
     # lineage that the iteration already paid for
     all_nodes = all_nodes.localCheckpoint(eager=False)
 
-    if stats is not None:
-        stats["path"] = "distributed"
+    if stats is None:
+        stats = {}
+    stats["path"] = "distributed"
     prev_fp = None
     rounds = 0
-    while rounds < max_iter:
+    converged = False
+    while rounds < max_iter and not converged:
         for _ in range(min(check_every, max_iter - rounds)):
             # lazy checkpoint: the fingerprint aggregate materializes
             # the batch, so the batch costs one job total
             e = _small_star(_large_star(e)).localCheckpoint(eager=False)
             rounds += 1
         fp = _fingerprint(e)
-        if stats is not None:
-            stats["rounds"] = rounds
-        if fp == prev_fp:
-            break
+        converged = fp == prev_fp
         prev_fp = fp
+    stats["rounds"] = rounds
+    stats["converged"] = converged
+    if not converged:
+        # unconverged labels split components silently — fail instead
+        raise RuntimeError(
+            f"connected_components: no fixpoint after max_iter={max_iter} rounds"
+        )
 
     # Converged: every edge points node → component-min (stars).  A node
     # may still appear as the root only; fill with self-label.

@@ -26,6 +26,7 @@ Parquet round-trips also truncate lineage exactly where
 from __future__ import annotations
 
 import hashlib
+import inspect
 import json
 import os
 import time
@@ -155,60 +156,49 @@ def run_linkage_checkpointed(
     workdir: str,
     **linkage_kwargs,
 ) -> DataFrame:
-    """Flagship pipeline split into resumable stages.
+    """``run_linkage`` split into resumable stages; same keyword
+    arguments, same stage functions, same mention partition.
 
-    Stage graph: mentions → edges → clusters.  Kill the job at any
-    point; re-running skips every stage whose manifest committed.
+    Stage graph: mentions (stage 1) → form edges (stages 2-3) →
+    clusters (stage 4).  Kill the job at any point; re-running skips
+    every stage whose manifest committed.  Only the keyword arguments
+    are fingerprinted: the inputs (pages, lexicon, alias embeddings)
+    are taken as fixed per ``workdir``.
     """
-    from medtype_spark.operators.cc import connected_components
-    from medtype_spark.pipeline import run_linkage
+    from medtype_spark import pipeline as pl
 
+    args = inspect.signature(pl.run_linkage).bind(
+        pages, lexicon, entity_types, **linkage_kwargs
+    )
+    args.apply_defaults()
+    p = args.arguments
+    pl.check_single_path(p["pair_grain"], p["fused"])
     ck = StageCheckpointer(spark, workdir)
 
-    def build_mentions():
-        # run the front half only (mentions table materialization)
-        res = run_linkage(pages, lexicon, entity_types, **linkage_kwargs)
-        return res["mentions"].drop("candidates", "filtered_candidates")
-
-    mentions = ck.stage("010_mentions", build_mentions, params=linkage_kwargs)
-
-    def build_edges():
-        from pyspark.sql import functions as F
-
-        from medtype_spark.operators.blocking import block_pairs
-        from medtype_spark.operators.pairs import jaro_winkler_udf
-
-        pairs = block_pairs(
-            mentions, key_col="block_key", id_col="mention_key",
-            extra_cols=["norm_form", "pred_type"],
-            hot_threshold=linkage_kwargs.get("hot_threshold", 10000),
-            target_cell=linkage_kwargs.get("target_cell", 2000),
-        )
-        scored = pairs.withColumn(
-            "score",
-            F.round(jaro_winkler_udf(F.col("a_norm_form"), F.col("b_norm_form")), 3),
-        )
-        agree = (
-            (F.size("a_pred_type") == 0) | (F.size("b_pred_type") == 0)
-            | (F.size(F.array_intersect("a_pred_type", "b_pred_type")) > 0)
-        )
-        thr = linkage_kwargs.get("score_threshold", 0.92)
-        return scored.where((F.col("score") >= thr) & agree).select(
-            F.col("a_mention_key").alias("src"), F.col("b_mention_key").alias("dst")
-        )
-
-    edges = ck.stage(
-        "020_edges", build_edges, upstream=["010_mentions"], params=linkage_kwargs
+    mentions = ck.stage(
+        "010_mentions",
+        lambda: pl.scan_mentions(pages, lexicon, p["type_scorer"], p["matcher"])
+        .drop("candidates"),
+        params=linkage_kwargs,
     )
 
-    def build_clusters():
-        from pyspark.sql import functions as F
-
-        return connected_components(
-            edges, vertices=mentions.select(F.col("mention_key").alias("node"))
-        ).select(F.col("node").alias("mention_key"), F.col("component").alias("entity_cluster"))
+    held: list[DataFrame] = []
+    edges = ck.stage(
+        "020_edges",
+        lambda: pl.form_edges(
+            pl.form_units(mentions, p["alias_embeddings"]),
+            p["score_threshold"], p["hot_threshold"], p["target_cell"],
+            p["require_type_agreement"], p["jw_weight"], held,
+        ),
+        upstream=["010_mentions"], params=linkage_kwargs,
+    )
+    for df in held:
+        df.unpersist()
 
     return ck.stage(
-        "030_clusters", build_clusters,
+        "030_clusters",
+        lambda: pl.form_clusters(
+            mentions, edges, p["cc_small_graph_threshold"], p["cc_stats"]
+        ),
         upstream=["010_mentions", "020_edges"], params=linkage_kwargs,
     )

@@ -757,11 +757,11 @@ def q53_flagship_linkage(spark, sf_dir):
     pages, gold = synth_pages(spark, 2000, n_entities=60, seed=42, partitions=1)
     lex = build_lexicon(60)
     etypes = entity_types_df(spark, 60)
-    # cleanup=False + checkpoint of the 1-row EVAL result (not the
-    # mention-grain cluster table): the final job computes clusters
-    # from the persisted mentions/edges and folds evaluation into the
-    # same action, saving one full materialization; caches are then
-    # released here, so bench loops stay clean.
+    # checkpoint the 1-row EVAL result (not the mention-grain cluster
+    # table): the final job computes clusters from the persisted
+    # mentions/edges and folds evaluation into the same action, saving
+    # one full materialization; caches are then released here, so
+    # bench loops stay clean.
     result = run_linkage(pages, lex, etypes, hot_threshold=500, target_cell=200)
     row = _metric_out(evaluate_linkage(result["clusters"], gold)).localCheckpoint()
     for df in result["persisted_frames"]:

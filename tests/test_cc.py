@@ -3,6 +3,8 @@ a pure-Python union-find oracle, isolated vertices, empty edges."""
 
 import random
 
+import pytest
+
 from medtype_spark.operators.cc import connected_components
 
 
@@ -55,6 +57,21 @@ def test_long_chain(spark):
     n = 200
     edges = [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n - 1)]
     _check(spark, edges)
+
+
+def test_max_iter_without_fixpoint_raises(spark):
+    """Stopping at max_iter before two fingerprints agree must raise,
+    not return a path graph split into several "components"."""
+    edges = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(31)]
+    edf = spark.createDataFrame(edges, ["src", "dst"])
+    stats: dict = {}
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edf, max_iter=1, small_graph_threshold=None, stats=stats)
+    assert stats["converged"] is False and stats["rounds"] == 1
+
+    stats = {}
+    connected_components(edf, small_graph_threshold=None, stats=stats)
+    assert stats["converged"] is True
 
 
 def test_two_components_and_isolated(spark):

@@ -57,8 +57,10 @@ times = []
 WARMUPS = int(os.environ.get("SCALE_WARMUPS", "2"))  # discarded, per reference benchmark.py:30
 for rep in range(repeats + WARMUPS):
     t0 = time.perf_counter()
-    result = run_linkage(pages, lex, etypes, cleanup=True, type_scorer='stub')
+    result = run_linkage(pages, lex, etypes, type_scorer='stub')
     n_clusters = result["clusters"].count()
+    for df in result["persisted_frames"]:
+        df.unpersist()
     dt = time.perf_counter() - t0
     if rep >= WARMUPS:
         times.append(dt)

@@ -85,12 +85,14 @@ n_cluster_rows = None
 for rep in range(repeats + WARMUPS):
     stats = {}
     t0 = time.perf_counter()
-    result = run_linkage(pages, lex, etypes, cleanup=True, type_scorer="stub",
+    result = run_linkage(pages, lex, etypes, type_scorer="stub",
                          matcher="set", hot_threshold=HOT_THRESHOLD,
                          target_cell=TARGET_CELL,
                          cc_small_graph_threshold=CC_THRESHOLD,
                          cc_stats=stats)
     n_cluster_rows = result["clusters"].count()
+    for df in result["persisted_frames"]:
+        df.unpersist()
     dt = time.perf_counter() - t0
     cc_stats = stats
     if rep >= WARMUPS:
@@ -112,11 +114,13 @@ if collect_evidence:
                   F.sum((F.col("count") > HOT_THRESHOLD).cast("long"))
                   .alias("n_salted_blocks")).collect()[0])
     stats2 = {}
-    res = run_linkage(pages, lex, etypes, cleanup=True, type_scorer="stub",
+    res = run_linkage(pages, lex, etypes, type_scorer="stub",
                       matcher="set", hot_threshold=HOT_THRESHOLD,
                       target_cell=TARGET_CELL,
                       cc_small_graph_threshold=CC_THRESHOLD, cc_stats=stats2)
     n_edges = res["edges"].count()
+    for df in res["persisted_frames"]:
+        df.unpersist()
     n_forms = units.select("norm_form").distinct().count()
     top_alias_share = (mentions.groupBy("mention")
                        .count().orderBy(F.desc("count")).limit(1)
